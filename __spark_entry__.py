@@ -2017,8 +2017,8 @@ def q_lexical_cosine_pairs_docs(spark, sf):
     At sf0.1+ the ~40-term synthetic vocabulary makes this corpus
     adversarially DENSE (97.8M candidate census at sf0.1) and the default
     pair_cap census RAISES — working as designed (dedup first / raise the
-    cap deliberately, as examples/sweep_r11_100x.py does to measure the
-    linear slope). The driver exercises this row at sf0.01 only."""
+    cap deliberately, as the r11 100x sweep did to measure the linear
+    slope; script in git history). The driver exercises this row at sf0.01 only."""
     docs = load_table(spark, sf, "documents")
     return L_text.tfidf_cosine_pairs(docs, threshold=0.9)
 

@@ -56,8 +56,10 @@ def _ngrams_of_chars(ch: Column, n: int) -> Column:
     gram position AND per element_at (the _ngrams_of lesson, ~30x measured
     when violated). Null/short inputs yield the empty array, exactly like
     :func:`_ngrams_of`; element_at stays in bounds by construction (max
-    index = size(ch))."""
-    m = F.size(ch) - F.lit(n - 1)
+    index = size(ch)). ``split('', '')`` is ``[""]``, not ``[]``, so the
+    empty string is guarded explicitly (it would otherwise yield one empty
+    unigram at ``n = 1``)."""
+    m = F.when(F.get(ch, 0) != "", F.size(ch) - F.lit(n - 1))
     idx = F.when(m >= 1, F.sequence(F.lit(1), m)).otherwise(
         F.array().cast("array<int>")
     )

@@ -29,22 +29,7 @@ def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None
         .config("spark.sql.shuffle.partitions", n_shuffle)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # AQE post-shuffle sizing seam (r16, r15 VERDICT #7): with
-        # parallelismFirst=true (Spark's default, kept here) AQE refuses to
-        # coalesce below the core count even when the data is tiny — the
-        # measured cause of the sub-1.0 8-vs-32-core ratios on the smallest
-        # bench rows. false sizes post-shuffle partitions purely by data
-        # (advisoryPartitionSizeInBytes), the scale-adaptive posture Spark's
-        # own docs recommend for production. Both are env-flippable; see
-        # OPTIMIZATION_r16.md for the measured trade at sf0.1.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("SPARK_GRAFT_AQE_ADVISORY_BYTES", "64m"),
-        )
+        # Other confs stay Spark defaults: r15/r16 A/B rejected parallelismFirst=false, RocksDB, zstd (OPTIMIZATION_r16.md)
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -53,31 +38,6 @@ def get_spark(app_name: str = "analyst_toolkit_spark", master: str | None = None
         # read as long; ingest.load_table converts them to µs timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # Shuffle/spill/broadcast codec (guide §2.3): lz4 default keeps the
-        # bench comparable across rounds; at cluster scale zstd usually
-        # trades a little CPU for markedly fewer shuffle bytes — flip via
-        # env and MEASURE (sf0.1 shuffles are KBs, so only a quiet-host A/B
-        # at real scale can justify changing the default).
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"),
-        )
-        # Streaming state-store provider seam (r16, r15 VERDICT #4): measured
-        # A/B at sf0.1 (3 interleaved runs per row, examples/prof_r16_rocksdb)
-        # put RocksDB inside the HDFSBacked provider's spread on all three
-        # stream-join rows — state there is KBs, so provider overhead is the
-        # whole cost either way. At production state sizes RocksDB is the
-        # documented choice (bounded JVM heap, changelog checkpointing):
-        # flip via env and measure micro-batch latency there. Default stays
-        # Spark's own default so stream bench rows remain comparable.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            os.environ.get(
-                "SPARK_GRAFT_STATE_STORE_PROVIDER",
-                "org.apache.spark.sql.execution.streaming.state."
-                "HDFSBackedStateStoreProvider",
-            ),
-        )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")

@@ -1,6 +1,8 @@
 """Incremental dedup index (llm/incremental.py): exact + near probes of a
 new batch against a persisted corpus index, pruning and append semantics."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -283,13 +285,49 @@ def sem_index_path(tmp_path_factory, spark, sem_corpus_and_batch):
     return path
 
 
-def test_semantic_probe_flags_known_vectors(spark, sem_corpus_and_batch, sem_index_path):
+@pytest.fixture(scope="module")
+def sem_batch_buckets(spark, sem_corpus_and_batch, sem_index_path):
+    """Distinct index buckets the batch lands in, bucketed with the index's
+    own plane family exactly as semantic_probe does."""
+    from analyst_toolkit_spark.llm.similarity import _hyperplanes, hyperplane_bucket
+
+    _, batch = sem_corpus_and_batch
+    meta = I._read_meta(spark, sem_index_path)
+    planes = _hyperplanes(int(meta["dim"]), int(meta["n_planes"]), int(meta["seed"]))
+    return batch.select(hyperplane_bucket(F.col("embedding"), planes)).distinct().count()
+
+
+@pytest.fixture(scope="module")
+def sem_probe_reference(spark, sem_corpus_and_batch, sem_index_path):
+    _, batch = sem_corpus_and_batch
+    out = I.semantic_probe(spark, sem_index_path, batch, threshold=0.999)
+    return sorted(map(tuple, out.collect()))
+
+
+@pytest.mark.parametrize("below_cap", [0, 1], ids=["cap_at_k", "cap_at_k_minus_1"])
+def test_semantic_probe_flags_known_vectors(
+    spark, sem_corpus_and_batch, sem_index_path, sem_batch_buckets, sem_probe_reference,
+    monkeypatch, below_cap,
+):
     """Scaled copies of indexed vectors match their source (exact-copy
     recall contract: identical direction -> identical bucket -> always a
     candidate -> exact-cosine verified at 1.0); organic vectors (max
-    pairwise cosine ~0.51 in this corpus) never reach 0.999."""
+    pairwise cosine ~0.51 in this corpus) never reach 0.999.
+
+    Boundary parity for SEM_PROBE_ISIN_MAX: with the cap at k (the batch's
+    distinct-bucket count) the index scan is pruned by an isin on the
+    bucket column; at k-1 the probe joins instead. Output rows are
+    identical either way."""
     corpus, batch = sem_corpus_and_batch
-    out = {r["vec_id"]: r for r in I.semantic_probe(spark, sem_index_path, batch, threshold=0.999).collect()}
+    k = sem_batch_buckets
+    assert k > 1
+    monkeypatch.setattr(I, "SEM_PROBE_ISIN_MAX", k - below_cap)
+    probe = I.semantic_probe(spark, sem_index_path, batch, threshold=0.999)
+    optimized = probe._jdf.queryExecution().optimizedPlan().toString()
+    assert bool(re.search(r"bucket#\d+L? (IN \(|INSET )", optimized)) == (below_cap == 0)
+    rows = probe.collect()
+    assert sorted(map(tuple, rows)) == sem_probe_reference
+    out = {r["vec_id"]: r for r in rows}
     for r in batch.collect():
         vid = r["vec_id"]
         if vid >= 100000:
@@ -439,8 +477,6 @@ def test_bm25_index_probe_prunes_partitions(spark, sf_dir, tmp_path):
     DIRECTORY level (PartitionFilters on term_bucket) with the term set
     pushed as a data filter — the corpus is never scanned; null terms raise
     in-plan."""
-    import re
-
     from analyst_toolkit_spark.llm import text as T  # noqa: F401
 
     docs = load_table(spark, sf_dir, "documents")

@@ -1392,6 +1392,32 @@ def test_char_ngrams_short_and_normalized(spark):
     assert out[4] == ["a b", " b ", "b c"]        # punctuation -> spaces, then grams
 
 
+@pytest.mark.parametrize("n", [1, 3, 5])
+def test_ngrams_of_chars_matches_substr_form(spark, n):
+    """The split-once gram builder equals the substr form only because
+    ``split(t, '')`` drops the trailing empty element (SPARK-40194, Spark
+    >= 3.4). On older Spark every row would gain a truncated gram; this
+    test makes such a deployment fail loudly. Astral codepoints, the empty
+    string, null and strings shorter than ``n`` are the edge fixtures."""
+    from analyst_toolkit_spark.llm import lm as L
+
+    texts = ["a\U0001F600b\U0001D518c", "", None, "ab", "abcd", "hello world", "\U0001F600" * 6]
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, t string")
+    ch = df.select("i", "t", F.split("t", "").alias("ch"))
+    got = {
+        r.i: (r.chars, r.subs)
+        for r in ch.select(
+            "i",
+            L._ngrams_of_chars(F.col("ch"), n).alias("chars"),
+            L._ngrams_of(F.col("t"), n).alias("subs"),
+        ).collect()
+    }
+    for i, (chars, subs) in got.items():
+        assert chars == subs, (texts[i], chars, subs)
+    astral = texts[0]
+    assert got[0][1] == [astral[k : k + n] for k in range(len(astral) - n + 1)]
+
+
 def test_remove_repeated_spans_ground_truth(spark):
     """The removal half: flagged spans are cut token-exactly, untouched docs
     pass through, a fully-duplicated doc empties out."""
@@ -3028,8 +3054,14 @@ def test_semantic_decon_vectorized_matches_jvm_fold(spark, monkeypatch):
     fold it replaces — the kernel accumulates dim-sequentially to replicate
     the fold's left-to-right IEEE add order, so equality is exact, not
     approximate. Pins both literal tiers (forward + exposure) over an
-    awkward fixture: negative values, magnitude spread, a null vector."""
+    awkward fixture: negative values, magnitude spread, a null vector.
+    Building the kernel UDF must use the type-hinted pandas_udf form:
+    its hints resolve to pd.Series and no UserWarning is emitted."""
     import random as _r
+    import typing
+    import warnings
+
+    import pandas as pd
 
     from analyst_toolkit_spark.llm import similarity as S
 
@@ -3046,9 +3078,16 @@ def test_semantic_decon_vectorized_matches_jvm_fold(spark, monkeypatch):
     corpus = spark.createDataFrame(corpus_rows, "vec_id int, embedding array<double>")
     bench = spark.createDataFrame(bench_rows, "vec_id int, embedding array<double>")
 
+    kernel = S._bench_dots_fn([[1.0, 2.0]], None)
+    assert typing.get_type_hints(kernel) == {"s": pd.Series, "return": pd.Series}
+
     def run_both(fn):
         monkeypatch.setattr(S, "DECON_VECTORIZED", True)
-        new = sorted(map(tuple, fn().collect()))
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            built = fn()
+        assert not [w for w in caught if issubclass(w.category, UserWarning)]
+        new = sorted(map(tuple, built.collect()))
         monkeypatch.setattr(S, "DECON_VECTORIZED", False)
         old = sorted(map(tuple, fn().collect()))
         return new, old
